@@ -2,7 +2,7 @@
 corpus, computed in a process of its own so that the benchmark's timed
 work never waits for it.
 
-    echo '{"n_convs": 100, "seed": 1, "clustered": false,
+    echo '{"conv_ids": [0, 1, 2], "seed": 1, "clustered": false,
            "queries": [["term00001", 10]], "nice": 0}' \
         | python3 perfbench/oracle_check.py
 
@@ -25,17 +25,16 @@ def main() -> None:
     # started beside timed set-up, the oracle runs at the lowest CPU
     # priority so that the set-up does not wait for it
     os.nice(req.get("nice", 0))
-    from embedanything_spark.datagen import gen_transcripts_pdf
     from embedanything_spark.oracle import OracleIndex
-    corpus = gen_transcripts_pdf(req["n_convs"], seed=req["seed"],
-                                 clustered=req["clustered"])
-    oracle = OracleIndex(corpus)
+    from workloads import corpus
+    docs = corpus(req["conv_ids"], req["seed"], req["clustered"])
+    oracle = OracleIndex(docs)
     out = []
     for text, k in req["queries"]:
         r = oracle.score_query(text, k)
         out.append([text, k, [int(d) for d in r["doc_id"]],
                     [float(s) for s in r["score"]]])
-    json.dump({"turns": len(corpus), "answers": out}, sys.stdout)
+    json.dump({"turns": len(docs), "answers": out}, sys.stdout)
 
 
 if __name__ == "__main__":

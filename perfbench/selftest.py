@@ -26,17 +26,21 @@ ROOT = HERE.parent
 sys.path[:0] = [str(HERE), str(ROOT)]
 
 
-def run(workload: str, trace: int, code: str | None = None) -> list[dict]:
+# Runs in the benchmark's process before every run: toy-scale inputs.
+TOY = """
+import workloads
+workloads.FULL = workloads.TOY
+"""
+
+
+def run(workload: str, trace: int, code: str = "") -> list[dict]:
     """One toy-scale run; returns its last two output lines as JSON.
     ``code`` runs in the benchmark's process before the run starts."""
     args = ["--workload", workload, "--seed", "3", "--seconds", "1",
-            "--trace", str(trace), "--scale", "toy"]
-    if code is None:
-        cmd = [sys.executable, str(HERE / "run.py"), *args]
-    else:
-        cmd = [sys.executable, "-c",
-               f"import sys; sys.path[:0] = [{str(HERE)!r}, {str(ROOT)!r}]\n"
-               f"{code}\nimport run; sys.exit(run.main({args!r}))"]
+            "--trace", str(trace)]
+    cmd = [sys.executable, "-c",
+           f"import sys; sys.path[:0] = [{str(HERE)!r}, {str(ROOT)!r}]\n"
+           f"{TOY}{code}\nimport run; sys.exit(run.main({args!r}))"]
     out = subprocess.run(cmd, cwd=ROOT, capture_output=True, text=True,
                          timeout=300)
     if out.returncode != 0:
@@ -87,7 +91,7 @@ def check_streams() -> None:
     def streams(seed):
         qs, order = query_stream(seed, 1000)
         return (qs.to_json(), order.tolist(),
-                [b.to_json() for b in cluster_batches(FULL.batch_convs, seed, 2)])
+                [b.to_json() for b in cluster_batches(FULL, seed)])
 
     assert streams(7) == streams(7), "same seed, different stream"
     assert streams(7) != streams(8), "different seeds, same stream"

@@ -4,10 +4,10 @@ per-layer metrics (filled only when tracing is on) and the figures
 under their workload-specific names (see README.md).
 
 Sizes are set so that a measurement campaign of 92 runs (4 + 22 per
-workload) ends within 57 minutes on a 4-core host: each run sets up and
-measures in 23–41 s. Corpora are therefore ≈72k turns (bulk_build), ≈48k (serve,
-batch_search) and ≈24k (maintain), not the 0.8M turns the 32-core
-``bench.py`` uses.
+workload) ends within 57 minutes on a 4-core host, where a run of 10
+measured seconds takes 25–40 s in all. Corpora are therefore ≈72k
+turns (bulk_build), ≈48k (serve, batch_search) and ≈24k (maintain),
+not the 0.8M turns the 32-core ``bench.py`` uses.
 """
 
 from __future__ import annotations
@@ -42,24 +42,46 @@ OPEN_LOOP_QPS = 30.0
 class Sizes:
     build_convs: int = 9_000      # ≈ 72k turns: 8 build buckets for every seed
     serve_convs: int = 6_000      # ≈ 48k turns
-    batch_convs: int = 6_000      # 3 topic epochs of 2000 convs
-    batch_block_range: int = 1024
+    batch_convs: int = 6_000      # ≈ 48k turns, spread over the epochs
+    batch_epochs: int = 16        # topic epochs of the clustered corpus
+    batch_block_range: int = 256
     batch_distinct: int = 4       # distinct 50-query batches
     maint_convs: int = 3_000      # ≈ 24k turns
     maint_block_range: int = 4096
     maint_delta: float = 0.01     # delta size as a share of the base
-    maint_cycles: int = 2         # timed cycles; the last is a merge fold
+    maint_pair_s: float = 5.0     # timed cycle pairs: seconds / this
 
 
 FULL = Sizes()
-TOY = Sizes(build_convs=300, serve_convs=300, batch_convs=2_000,
-            batch_block_range=256, batch_distinct=2, maint_convs=300,
+TOY = Sizes(build_convs=300, serve_convs=300, batch_convs=320,
+            batch_epochs=4, batch_distinct=2, maint_convs=300,
             maint_block_range=256, maint_delta=0.05)
+
+
+def clustered_ids(sz: Sizes) -> list[int]:
+    """Conversation ids of the clustered corpus: the first
+    ``batch_convs / batch_epochs`` conversations of each of
+    ``batch_epochs`` topic epochs (``datagen.CLUSTER_EPOCH`` ids each).
+    The epochs, and with them the share of posting ranges a pool-term
+    query can skip, are those of a corpus ``CLUSTER_EPOCH * batch_epochs
+    / batch_convs`` times larger, at this corpus's build cost."""
+    from embedanything_spark.datagen import CLUSTER_EPOCH
+    per = sz.batch_convs // sz.batch_epochs
+    return [e * CLUSTER_EPOCH + j for e in range(sz.batch_epochs)
+            for j in range(per)]
 
 
 # ----------------------------------------------------------- inputs
 
-def write_delta(pdf: pd.DataFrame, path: Path) -> None:
+def corpus(conv_ids, seed: int, clustered: bool = False) -> pd.DataFrame:
+    """The generated transcripts of the given conversations: the rows
+    ``datagen.gen_transcripts_df`` and ``gen_transcripts_pdf`` make per
+    conversation (both go through ``datagen._gen_batch``)."""
+    from embedanything_spark.datagen import _gen_batch
+    return _gen_batch(conv_ids, seed, clustered)
+
+
+def write_parquet(pdf: pd.DataFrame, path: Path) -> None:
     """Write generated transcripts as one parquet file with the schema
     ``datagen.gen_transcripts_df`` produces (ts as a UTC timestamp; the
     package's sessions run in UTC), atomically: a streaming source must
@@ -102,9 +124,10 @@ class Oracle:
     beside timed set-up, it runs at the lowest CPU priority
     (``beside_setup``)."""
 
-    def __init__(self, ctx, n_convs: int, queries, clustered=False,
+    def __init__(self, ctx, conv_ids: list[int], queries, clustered=False,
                  beside_setup=False):
-        req = {"n_convs": n_convs, "seed": ctx.seed, "clustered": clustered,
+        req = {"conv_ids": conv_ids, "seed": ctx.seed,
+               "clustered": clustered,
                "queries": sorted({(str(t), int(k)) for t, k in queries}),
                "nice": 19 if beside_setup else 0}
         self._proc = subprocess.Popen(
@@ -136,25 +159,30 @@ def check_frames(tally, frames, qsets, want) -> None:
                       f"wrong answer: {r.query_text!r} k={r.k}")
 
 
-def cluster_batches(n_convs: int, seed: int, n: int) -> list[pd.DataFrame]:
-    """The batch_search workload's ``n`` distinct 50-query batches."""
-    from embedanything_spark.datagen import gen_cluster_query_set
-    return [gen_cluster_query_set(n_convs, seed=seed * 1000 + j)
-            for j in range(n)]
+def cluster_batches(sz: Sizes, seed: int) -> list[pd.DataFrame]:
+    """The batch_search workload's distinct 50-query batches, drawn
+    over the clustered corpus's epochs."""
+    from embedanything_spark.datagen import (CLUSTER_EPOCH,
+                                             gen_cluster_query_set)
+    return [gen_cluster_query_set(sz.batch_epochs * CLUSTER_EPOCH,
+                                  seed=seed * 1000 + j)
+            for j in range(sz.batch_distinct)]
 
 
-def write_input(ctx, n_convs: int, clustered: bool = False) -> None:
-    """Generate the workload's corpus into ``work/input`` with
-    ``datagen.gen_transcripts_df`` (the same rows as
-    ``gen_transcripts_pdf``, which the oracle uses)."""
-    from embedanything_spark.datagen import gen_transcripts_df
-    gen_transcripts_df(ctx.spark, n_convs, seed=ctx.seed,
-                       partitions=ctx.cores,
-                       clustered=clustered).write.parquet(
-        str(ctx.work / "input"))
+def write_input(ctx, conv_ids: list[int], clustered: bool = False) -> None:
+    """Generate the workload's corpus into ``work/input`` as one parquet
+    file per core, as ``gen_transcripts_df(partitions=nproc)`` would
+    write it. It is generated in this process rather than by a Spark
+    job: the corpus is the same, and the run saves a cold JVM's job."""
+    (ctx.work / "input").mkdir()
+    for i, part in enumerate(np.array_split(np.asarray(conv_ids),
+                                            ctx.cores)):
+        write_parquet(corpus(part, ctx.seed, clustered),
+                      ctx.work / "input" / f"part-{i:05d}.parquet")
 
 
-def build_input_index(ctx, n_convs: int, block_range: int | None = None,
+def build_input_index(ctx, conv_ids: list[int],
+                      block_range: int | None = None,
                       clustered: bool = False) -> tuple[Path, int]:
     """Build and compact the index a query workload runs against (not
     timed, not set-up); returns (root, turns). Superseded files and the
@@ -162,13 +190,16 @@ def build_input_index(ctx, n_convs: int, block_range: int | None = None,
     cache costs nothing to delete, one the kernel has written back
     costs seconds here."""
     from embedanything_spark.index.build import IndexWriter
-    write_input(ctx, n_convs, clustered)
+    write_input(ctx, conv_ids, clustered)
+    ctx.log("input written")
     root = ctx.work / "idx"
     kw = {"block_range": block_range} if block_range else {}
     w = IndexWriter(str(root), **kw)
     turns = w.build(ctx.spark.read.parquet(str(ctx.work / "input")))[
         "n_docs"]
+    ctx.log("input built")
     w.compact(ctx.spark)
+    ctx.log("input compacted")
     w.expire_retired()
     shutil.rmtree(ctx.work / "input")
     return root, turns
@@ -224,10 +255,10 @@ def bulk_build(ctx):
     from embedanything_spark.index.build import IndexWriter
     from embedanything_spark.index.query import IndexReader
     qs = gen_query_set(seed=ctx.seed).iloc[::5].reset_index(drop=True)
-    oracle = Oracle(ctx, ctx.sizes.build_convs, zip(qs.query_text, qs.k),
-                    beside_setup=True)
+    ids = list(range(ctx.sizes.build_convs))
+    oracle = Oracle(ctx, ids, zip(qs.query_text, qs.k), beside_setup=True)
     spark = ctx.start_spark()
-    write_input(ctx, ctx.sizes.build_convs)
+    write_input(ctx, ids)
     ctx.log("input written")
     src = spark.read.parquet(str(ctx.work / "input"))
     t0 = time.perf_counter()
@@ -353,9 +384,10 @@ def serve(ctx):
     qs, order = query_stream(ctx.seed, 100_000)
     texts = qs["query_text"].tolist()
     ks = qs["k"].astype(int).tolist()
-    oracle = Oracle(ctx, ctx.sizes.serve_convs, zip(texts, ks))
+    ids = list(range(ctx.sizes.serve_convs))
+    oracle = Oracle(ctx, ids, zip(texts, ks))
     ctx.start_spark(input_only=True)
-    root, turns = build_input_index(ctx, ctx.sizes.serve_convs)
+    root, turns = build_input_index(ctx, ids)
     ctx.stop_spark()
     want = oracle.answers()
     ctx.log("input index built")
@@ -391,7 +423,7 @@ def serve(ctx):
     half = ctx.seconds / 2
     n_open = max(1, int(half * OPEN_LOOP_QPS))
     opened = []
-    with ThreadPoolExecutor(max_workers=64) as pool:
+    with ThreadPoolExecutor(max_workers=ctx.cores) as pool:
         t0 = time.perf_counter()
         for i in range(n_open):
             due = t0 + i / OPEN_LOOP_QPS
@@ -483,13 +515,13 @@ def batch_search(ctx):
     queries, each result materialized."""
     from embedanything_spark.index.query import IndexReader
     sz = ctx.sizes
-    batches = cluster_batches(sz.batch_convs, ctx.seed, sz.batch_distinct)
+    batches = cluster_batches(sz, ctx.seed)
+    ids = clustered_ids(sz)
     spark = ctx.start_spark()
-    oracle = Oracle(ctx, sz.batch_convs,
-                    [(r.query_text, r.k) for b in batches
-                     for r in b.itertuples()], clustered=True)
-    root, turns = build_input_index(ctx, sz.batch_convs,
-                                    sz.batch_block_range, clustered=True)
+    oracle = Oracle(ctx, ids, [(r.query_text, r.k) for b in batches
+                               for r in b.itertuples()], clustered=True)
+    root, turns = build_input_index(ctx, ids, sz.batch_block_range,
+                                    clustered=True)
     want = oracle.answers()
     ctx.log("input index built")
 
@@ -540,6 +572,7 @@ def batch_search(ctx):
         # the same batch once without pruning: what pruning skipped
         run(batches[0], "search.noprune", prune=False)
     check_frames(ctx.tally, frames, fq, want)
+    ctx.log("checked")
 
     layer = {}
     bpt = _index_metrics(root, turns, layer)
@@ -591,14 +624,14 @@ def maintain(ctx):
     compacts (``scope="auto"``, then a merge fold in the last cycle)
     while one thread keeps querying a long-lived ``IndexReader``
     through ``search_local``."""
-    from embedanything_spark.datagen import gen_conv
     from embedanything_spark.index.build import (IndexWriter,
                                                  committed_lineage)
     from embedanything_spark.index.query import IndexReader
     from embedanything_spark.streaming.ingest import StreamingIndexIngest
     sz = ctx.sizes
     spark = ctx.start_spark()
-    root, _ = build_input_index(ctx, sz.maint_convs, sz.maint_block_range)
+    root, _ = build_input_index(ctx, list(range(sz.maint_convs)),
+                                sz.maint_block_range)
     ctx.log("input index built")
 
     tr, tally = ctx.tracer, ctx.tally
@@ -619,10 +652,8 @@ def maintain(ctx):
         returns (turns, seconds from stream start to termination)."""
         first = next_conv[0]
         next_conv[0] += n_delta
-        delta = pd.concat([gen_conv(i, seed=ctx.seed)
-                           for i in range(first, first + n_delta)],
-                          ignore_index=True)
-        write_delta(delta, src / f"delta-{c:04d}.parquet")
+        delta = corpus(range(first, first + n_delta), ctx.seed)
+        write_parquet(delta, src / f"delta-{c:04d}.parquet")
         tr.op_hint = f"cycle-{c}"
         t = time.perf_counter()
         with tr.span("ingest.query", op=f"cycle-{c}"):
@@ -697,15 +728,15 @@ def maintain(ctx):
     th = threading.Thread(target=reader_loop)
     th.start()
     cycles = []
+    # compact(auto) adds a delta tier until the layer cap, where it
+    # folds every tier in one merge; a run is too short to reach the
+    # cap, so cycles come in pairs whose second runs that fold directly
+    n_cycles = 2 * max(1, round(ctx.seconds / sz.maint_pair_s))
     try:
-        for c in range(1, sz.maint_cycles + 1):
+        for c in range(1, n_cycles + 1):
             turns, ingest_s = ingest_delta(c)
-            # compact(auto) adds a delta tier until the layer cap, where
-            # it folds every tier in one merge; a run is too short to
-            # reach the cap, so its last cycle runs that fold directly
-            last = c == sz.maint_cycles
             cycles.append({"turns": turns, "ingest_s": ingest_s,
-                           **compact(c, "merge" if last else "auto")})
+                           **compact(c, "auto" if c % 2 else "merge")})
     finally:
         stop.set()
         th.join()
@@ -726,6 +757,8 @@ def maintain(ctx):
              "maintain_serve_p50_ms": e2e["latency_p50_ms"],
              "maintain_serve_p90_ms": e2e["latency_p90_ms"],
              "cycles": len(cycles), "reads": len(reads),
+             "ingest_walls_s": [c["ingest_s"] for c in cycles],
+             "compact_walls_s": [c["compact_s"] for c in cycles],
              "scopes": [c["scope"] for c in cycles]}
     if tr.enabled:
         per = ctx.rollup()
